@@ -95,9 +95,10 @@ def values_df(
     # _sql_str's escaping assumes the default parser mode (ADVICE r19
     # item 2): under escapedStringLiterals=true backslashes are taken
     # literally and '\\' / \' would corrupt string values — take the
-    # pickled path there instead of emitting a wrong relation
+    # pickled path there instead of emitting a wrong relation. Spark
+    # parses boolean confs case-insensitively ("True" enables it too).
     if (
-        spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
+        spark.conf.get("spark.sql.parser.escapedStringLiterals", "false").lower()
         == "true"
     ):
         return spark.createDataFrame([tuple(r) for r in rows], schema)

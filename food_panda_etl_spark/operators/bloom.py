@@ -300,7 +300,9 @@ def bloom_prefilter(
     with duplicate (j, b) rows; `bloom_merge` remains the documented
     combine). Present keys ALWAYS get 1; NULL keys get 0 (a NULL cell
     expression never equi-matches — the same reason the join this
-    guards would drop the row)."""
+    guards would drop the row). The k build sides read one
+    ``localCheckpoint`` of the sketch's distinct (j, b) cells, so
+    calling this runs the sketch's shuffle stage once, right away."""
     width = _validate(m_bits, k_hashes)
     check_probe_geometry(
         "bloom_prefilter",
@@ -333,15 +335,18 @@ def bloom_prefilter(
             "r12); pick an unprefixed name"
         )
     k = F.col(col)
+    # ONE materialization of the distinct (j, b) cells feeds all k
+    # broadcast builds: the sketch lineage runs once, not k times, and a
+    # nondeterministic lineage cannot hand the builds divergent bit sets
+    # (which would break "present keys ALWAYS get 1")
+    cells = sketch.select("j", "b").distinct().localCheckpoint(eager=False)
     out = df
     hit_all = None
     for j in range(k_hashes):
         # ≤ width distinct positions per hash row: at most ONE match
         # per probe, so the left join can never duplicate fact rows
-        row_j = (
-            sketch.filter(F.col("j") == j)
-            .select(F.col("b").alias(f"__bloom{j}"))
-            .distinct()
+        row_j = cells.filter(F.col("j") == j).select(
+            F.col("b").alias(f"__bloom{j}")
         )
         out = out.join(
             F.broadcast(row_j),

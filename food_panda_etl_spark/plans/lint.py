@@ -18,11 +18,15 @@ from pyspark.sql import DataFrame
 
 
 def explain_formatted(df: DataFrame) -> str:
+    return _explain(df, "formatted")
+
+
+def _explain(df: DataFrame, mode: str) -> str:
     qe = df._jdf.queryExecution()
-    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
+    jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        mode
     )
-    return qe.explainString(mode)
+    return qe.explainString(jmode)
 
 
 @dataclass
@@ -36,6 +40,8 @@ class PlanSummary:
     nested_loop_joins: int = 0
     cartesian_products: int = 0
     window_group_limits: int = 0
+    python_scans: int = 0
+    python_evals: int = 0
     read_schemas: list[str] = field(default_factory=list)
 
 
@@ -57,6 +63,18 @@ def plan_summary(df: DataFrame) -> PlanSummary:
     s.nested_loop_joins = len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan))
     s.cartesian_products = len(re.findall(r"\(\d+\) CartesianProduct", plan))
     s.window_group_limits = len(re.findall(r"\(\d+\) WindowGroupLimit", plan))
+    # Python UDF / pandas nodes: each pays a worker hand-off per task
+    s.python_evals = len(
+        re.findall(
+            r"\(\d+\) (?:MapInPandas|MapInArrow|ArrowEvalPython|BatchEvalPython)\b",
+            plan,
+        )
+    )
+    # Python data-source scans: only the one-line node string marks them
+    # ("BatchScan <name>[cols] (Python)"), not the formatted details
+    s.python_scans = len(
+        re.findall(r"\bBatchScan [^\n]*\(Python\)", _explain(df, "simple"))
+    )
     s.read_schemas = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
     return s
 

@@ -1,15 +1,21 @@
 """Paginated REST listing scan as a Spark Python DataSource, plus the
 per-key enrichment lookups as an Arrow-batched ``mapInPandas`` stage.
 
-Scale design vs the reference (``/root/reference/src/main.rs:107-176``):
+Scale design vs the reference (its ``src/main.rs:107-176``):
 the reference walks cities serially, pages serially (jittered sleeps), and
 enriches vendors one at a time. Here the *driver* does only the cheap
 probe (page 0 per city → ``available_count`` → page count, mirroring
-``src/main.rs:120-123``); every page becomes an ``InputPartition`` so a
-1000-executor cluster fetches 1000 pages concurrently, and enrichment
-lookups run inside ``mapInPandas`` over whatever partitioning the code
-universe already has. Politeness knobs (per-partition rate limits) belong
-in the backend; correctness never depends on them.
+``src/main.rs:120-123``); every city becomes one ``InputPartition`` that
+walks its own pages in order, so the listing parallelizes across cities.
+A Python data-source task pays a fixed worker hand-off cost that dwarfs
+one page fetch, so a task per page bought no speed; walking a city's
+pages serially is also the reference's order and the polite pattern
+against a rate-limited listing API. Enrichment lookups run inside
+``mapInPandas`` over whatever partitioning the code universe already has
+and are materialized once per run, so every vendor is looked up exactly
+once however many relations consume the result. Politeness knobs
+(per-partition rate limits) belong in the backend; correctness never
+depends on them.
 """
 
 from __future__ import annotations
@@ -44,11 +50,10 @@ def _resolve_backend(spec: str):
 
 
 @dataclass
-class _PagePartition(InputPartition):
+class _CityPartition(InputPartition):
     city_id: str
-    page: int
-    offset: int
-    limit: int
+    pages: int
+    page_size: int
 
 
 class _VendorListReader(DataSourceReader):
@@ -63,7 +68,8 @@ class _VendorListReader(DataSourceReader):
     def partitions(self) -> list[InputPartition]:
         """Driver-side probe per city: page 0 → available_count →
         ``total_pages = ceil(available/returned)`` (``src/main.rs:120-123``),
-        then one InputPartition per page — the unit of executor fan-out."""
+        then one InputPartition per city carrying its page count — the
+        unit of executor fan-out."""
         backend = _resolve_backend(self.backend_spec)
         parts: list[InputPartition] = []
         for city in self.cities:
@@ -75,23 +81,20 @@ class _VendorListReader(DataSourceReader):
             )
             avail = probe["data"]["available_count"]
             pages = max(1, math.ceil(avail / self.page_size))
-            parts.extend(
-                _PagePartition(city, p, p * self.page_size, self.page_size)
-                for p in range(pages)
-            )
+            parts.append(_CityPartition(city, pages, self.page_size))
         return parts
 
-    def read(self, partition: _PagePartition) -> Iterator[tuple]:
+    def read(self, partition: _CityPartition) -> Iterator[tuple]:
         backend = _resolve_backend(self.backend_spec)
-        resp = retry_with_backoff(
-            lambda _attempt: backend.list_page(
-                partition.city_id, partition.offset, partition.limit
-            ),
-            retries=self.retries,
-        )
-        for item in resp["data"]["items"]:
-            # batch_number is the 1-based page — src/services/vendor.rs:66
-            yield (partition.city_id, item["code"], partition.page + 1)
+        city, size = partition.city_id, partition.page_size
+        for page in range(partition.pages):
+            resp = retry_with_backoff(
+                lambda _attempt, p=page: backend.list_page(city, p * size, size),
+                retries=self.retries,
+            )
+            for item in resp["data"]["items"]:
+                # batch_number is the 1-based page — src/services/vendor.rs:66
+                yield (city, item["code"], page + 1)
 
 
 class VendorListDataSource(DataSource):
@@ -133,6 +136,17 @@ def lookup_vendor_payloads(
     degradation of ``src/services/vendor.rs:96-105``). Returns
     ``(code, details, ratings, reviews[])`` — feed :func:`split_payloads`
     to get the three relations ``enrich_vendors`` expects.
+
+    The result is materialized once (``localCheckpoint``), so each code
+    is looked up exactly once per run however many relations consume
+    it, and every consumer sees the same answer for a code (a details
+    400 nulls that code's ratings and reviews everywhere, as
+    ``src/services/vendor.rs:82-95`` requires). Calling this fires one
+    Spark job: adaptive execution runs the ``distinct`` shuffle stage,
+    with the listing scan, when the checkpoint is planned; the lookups
+    themselves run in the first action that reads the result. A lost
+    executor then fails that action instead of silently re-calling the
+    API; the dynamic-overwrite sink keeps a re-run idempotent.
     """
     import pandas as pd  # executor-side import
 
@@ -163,13 +177,19 @@ def lookup_vendor_payloads(
                 )
             yield pd.DataFrame(out)
 
-    return codes.select("code").distinct().mapInPandas(fetch, LOOKUP_SCHEMA)
+    return (
+        codes.select("code")
+        .distinct()
+        .mapInPandas(fetch, LOOKUP_SCHEMA)
+        .localCheckpoint(eager=False)
+    )
 
 
 def split_payloads(looked_up: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Fan the wide lookup result into the (details, reviews, ratings)
-    relations of ``vendor.enrich_vendors`` — pure column ops, no extra
-    backend calls."""
+    relations of ``vendor.enrich_vendors`` — pure column ops over the
+    materialized lookup result, so the three relations make no backend
+    calls of their own."""
     details = looked_up.select("code", "details")
     ratings = looked_up.select("code", "ratings")
     reviews = looked_up.select(

@@ -7,6 +7,8 @@ is what lets Catalyst push filters and prune columns into the scan.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -36,9 +38,11 @@ DIMENSION_TABLES = {"region", "nation", "supplier", "part"}
 # passing it back via reader.schema() skips the job; this is METADATA
 # caching (what a metastore does), not result caching — every action
 # still computes from the parquet bytes, and the cache dies with the
-# process. Keyed by applicationId so a new session (or a test's fresh
-# local session) re-infers.
-_SCHEMA_CACHE: dict[tuple[str, str, int], StructType] = {}
+# process. Keyed by (applicationId, path) so a new session (or a test's
+# fresh local session) re-infers; each entry holds the file's mtime with
+# its schema and is replaced when the file is rewritten, so a path keeps
+# one entry however often it changes.
+_SCHEMA_CACHE: dict[tuple[str, str], tuple[int, StructType]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -58,25 +62,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # correctness driver's, a notebook's — can read the table too.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    # mtime in the key (ADVICE r19 item 3): a same-path rewrite with a
-    # different schema within one session would otherwise read through
-    # the stale StructType and yield silent NULLs for renamed columns.
-    # os.stat of a local path is ~microseconds — still no Spark job.
-    # (Non-local/unstat-able paths fall back to mtime=0: same-session
+    # mtime checked on every hit (ADVICE r19 item 3): a same-path rewrite
+    # with a different schema within one session would otherwise read
+    # through the stale StructType and yield silent NULLs for renamed
+    # columns. os.stat of a local path is ~microseconds — still no Spark
+    # job. (Non-local/unstat-able paths fall back to mtime=0: same-session
     # immutability is then the caller's contract, as documented above.)
-    import os
-
     try:
         mtime = os.stat(path).st_mtime_ns
     except OSError:
         mtime = 0
-    key = (spark.sparkContext.applicationId, path, mtime)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
+    key = (spark.sparkContext.applicationId, path)
+    hit = _SCHEMA_CACHE.get(key)
+    if hit is None or hit[0] != mtime:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
+        _SCHEMA_CACHE[key] = (mtime, df.schema)
     else:
-        df = spark.read.schema(schema).parquet(path)
+        df = spark.read.schema(hit[1]).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) read as epoch-nanos long (see session.py);
         # truncate to micros exactly like DuckDB does (floor division —

@@ -232,6 +232,27 @@ def test_prefilter_matches_probe_and_plans_map_only(spark, sf_dir):
                         "k", M_BITS, K)
 
 
+def test_prefilter_reads_one_sketch_materialization(spark):
+    """The k broadcast builds read ONE materialization of the sketch
+    cells (ADVICE r20): a sketch lineage runs once per prefilter, not
+    once per hash row, so a nondeterministic lineage cannot give the
+    builds divergent bit sets. The lineage's UDF counts its rows."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(k):
+        seen.add(1)
+        return k
+
+    tap_udf = F.udf(tap, "long").asNondeterministic()
+    keys = list(range(50))
+    base = spark.createDataFrame([(k,) for k in keys], "k long")
+    sk = bloom_sketch(base.select(tap_udf("k").alias("k")), "k", M_BITS, K)
+    probes = spark.range(100).select(F.col("id").alias("k"))
+    out = bloom_prefilter(sk, probes, "k", M_BITS, K).collect()
+    assert seen.value == len(keys)  # not K * len(keys)
+    assert all(r["maybe_present"] == 1 for r in out if r["k"] in keys)
+
+
 def test_merge_groups_rebuckets_and_windows(spark):
     """The re-bucketing combine (family symmetry with cms/hll
     merge_groups): per-day sketches OR'd across the day dimension ==

@@ -89,10 +89,13 @@ def test_unsupported_type_falls_back(spark):
 def test_escaped_string_literals_mode_falls_back(spark):
     # ADVICE r19 item 2: _sql_str assumes escapedStringLiterals=false;
     # under the legacy parser mode the relation must come out value-
-    # identical via the fallback path.
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
-    try:
-        got = values_df(spark, [("a\\b'c",)], "t string").collect()[0][0]
-    finally:
-        spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
-    assert got == "a\\b'c"
+    # identical via the fallback path. Spark parses boolean confs
+    # case-insensitively, so every spelling of true enables the mode
+    # (ADVICE r20).
+    for flag in ("true", "True", "TRUE"):
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", flag)
+        try:
+            got = values_df(spark, [("a\\b'c",)], "t string").collect()[0][0]
+        finally:
+            spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+        assert got == "a\\b'c", flag

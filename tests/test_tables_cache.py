@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import shutil
 
+from food_panda_etl_spark import tables
 from food_panda_etl_spark.tables import load_table
 
 
@@ -31,3 +32,22 @@ def test_rewritten_table_reinfers_schema(spark, tmp_path):
     assert set(v2.columns) == {"doc_id", "body"}
     rows = v2.collect()
     assert rows[0]["body"] == "bye"  # NOT a silent NULL through a stale schema
+
+
+def test_rewrites_replace_the_cache_entry(spark, tmp_path):
+    """Each rewrite of a path replaces that path's cache entry instead
+    of adding one keyed by the new mtime (ADVICE r20: the cache grew by
+    one schema per rewrite)."""
+    sf_dir = str(tmp_path)
+    path = f"{sf_dir}/documents.parquet"
+    key = (spark.sparkContext.applicationId, path)
+    before = len(tables._SCHEMA_CACHE)
+    for i in range(3):
+        spark.createDataFrame([(i, "x")], f"doc_id bigint, c{i} string").write.mode(
+            "overwrite"
+        ).parquet(path)
+        os.utime(path, ns=(i + 1, i + 1))  # distinct mtimes on any filesystem
+        df = load_table(spark, sf_dir, "documents")
+        assert set(df.columns) == {"doc_id", f"c{i}"}
+        assert tables._SCHEMA_CACHE[key][0] == i + 1
+    assert len(tables._SCHEMA_CACHE) == before + 1

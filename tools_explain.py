@@ -3,7 +3,8 @@
 Usage: python tools_explain.py <tag> [query ...]
 With no query args, captures every bench HEADLINE key. Writes
 plans/<tag>/<query>.txt and prints a one-line plan-shape summary
-(Exchange / join strategy / Python-eval node counts) per query.
+(Exchange / join strategy / Python-eval and Python-scan node counts)
+per query.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bench import HEADLINE  # noqa: E402
+from food_panda_etl_spark.plans import plan_summary  # noqa: E402
 from food_panda_etl_spark.queries import QUERIES  # noqa: E402
 from food_panda_etl_spark.session import get_spark  # noqa: E402
 
@@ -25,7 +27,10 @@ def plan_text(df) -> str:
     )
 
 
-def shape(txt: str) -> str:
+def shape(txt: str, python_scans: int) -> str:
+    """Node counts of a formatted plan. The formatted text does not mark
+    Python data-source scans, so their count comes from
+    ``plan_summary(df).python_scans``."""
     c = {
         "Exchange": len(re.findall(r"\bExchange\b", txt)),
         "BHJ": len(re.findall(r"\bBroadcastHashJoin\b", txt)),
@@ -36,6 +41,7 @@ def shape(txt: str) -> str:
         "Py": len(
             re.findall(r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas", txt)
         ),
+        "PyScan": python_scans,
         "Scan": len(re.findall(r"Scan parquet|Scan ExistingRDD", txt)),
     }
     return " ".join(f"{k}={v}" for k, v in c.items())
@@ -52,12 +58,13 @@ def main() -> None:
         try:
             df = QUERIES[name](spark, sf_dir)
             txt = plan_text(df)
+            py_scans = plan_summary(df).python_scans
         except Exception as e:  # noqa: BLE001
             print(f"{name}: ERROR {e}")
             continue
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(txt)
-        print(f"{name}: {shape(txt)}")
+        print(f"{name}: {shape(txt, py_scans)}")
     spark.stop()
 
 
